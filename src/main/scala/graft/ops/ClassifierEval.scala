@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.roundPinned
 
@@ -11,9 +12,13 @@ import graft.functions.GraftFunctions.roundPinned
   * runs against each other (κ IS the inter-annotator-agreement
   * statistic labeling pipelines report).
   *
-  * Scale shape: ONE grouped count to the (pred, gold) confusion frame
-  * (≤ classes² tiny rows — map-side combined, the corpus streams
-  * once); everything else derives from that broadcast-sized frame.
+  * Scale shape: each (pred, gold) row contributes two tiny rows —
+  * (gold class: +1 gold, +1 tp if agreed) and (pred class: +1 pred) —
+  * and ONE map-side-combined groupBy folds them into the per-class
+  * frame (≤ classes rows). Bounded frames use a one-task window;
+  * the corpus-level totals (N, agreements, chance agreement) are
+  * windows over that per-class frame. `RunningTotals` is for
+  * unbounded global orderings, which this is not.
   *
   * Exactness: all counts integer; ratios are single divisions of
   * integers; κ's chance-agreement term Σ (n_gold/N)·(n_pred/N)
@@ -34,27 +39,25 @@ object ClassifierEval {
       gold: Column): DataFrame = {
     val base = df.select(pred.cast("string").as("__p"), gold.cast("string").as("__g"))
       .filter(col("__p").isNotNull && col("__g").isNotNull)
-    val pairs = graft.CachedFrames.persistOnce(
-      base.groupBy(col("__p"), col("__g")).agg(count(lit(1)).as("cnt")))
-    val goldN = pairs.groupBy(col("__g").as("class")).agg(sum(col("cnt")).as("n_gold"))
-    val predN = pairs.groupBy(col("__p").as("class")).agg(sum(col("cnt")).as("n_pred"))
-    val tpN = pairs.filter(col("__p") === col("__g"))
-      .groupBy(col("__g").as("class")).agg(sum(col("cnt")).as("tp"))
-    val cls = goldN.join(predN, Seq("class"), "full")
-      .join(tpN, Seq("class"), "left")
-      .na.fill(0L, Seq("n_gold", "n_pred", "tp"))
-    val tot = pairs.agg(
-      sum(col("cnt")).as("__nn"),
-      sum(when(col("__p") === col("__g"), col("cnt")).otherwise(0L)).as("__agree"))
+    val agreed = when(col("__p") === col("__g"), 1L).otherwise(0L)
+    val contributions = explode(array(
+      struct(col("__g").as("class"), lit(1L).as("g"), lit(0L).as("p"), agreed.as("t")),
+      struct(col("__p").as("class"), lit(0L).as("g"), lit(1L).as("p"), lit(0L).as("t"))))
+    val cls = base.select(contributions.as("__c"))
+      .groupBy(col("__c.class").as("class"))
+      .agg(
+        sum(col("__c.g")).as("n_gold"),
+        sum(col("__c.p")).as("n_pred"),
+        sum(col("__c.t")).as("tp"))
+    val all = Window.partitionBy()
     val nn = col("__nn").cast("double")
     val term = roundPinned((col("n_gold").cast("double") / nn) *
       (col("n_pred").cast("double") / nn) * lit(1e12)).cast("long")
-    val po = col("__agree").cast("double") / nn
-    // κ's chance-agreement sum as a broadcast grand total (r22): the
-    // class frame is small, but this removes the repo's last
-    // everything-into-one-task window — same order-free integer sum.
-    PrefixSum.withGrandTotals(cls.crossJoin(broadcast(tot)), Seq("__peq" -> term))
-      .withColumn("__pe", col("__peq").cast("double") / lit(1e12))
+    val po = sum(col("tp")).over(all).cast("double") / nn
+    cls
+      .withColumn("__nn", sum(col("n_gold")).over(all))
+      .withColumn("__pe", sum(term).over(all).cast("double") / lit(1e12))
+      .withColumn("__po", po)
       .select(
         col("class"), col("n_gold"), col("n_pred"), col("tp"),
         roundPinned(try_divide(col("tp").cast("double"), col("n_pred").cast("double")), 4)
@@ -63,8 +66,8 @@ object ClassifierEval {
           .as("recall_r"),
         roundPinned(try_divide(lit(2.0) * col("tp").cast("double"),
           (col("n_pred") + col("n_gold")).cast("double")), 4).as("f1_r"),
-        roundPinned(po, 4).as("accuracy_r"),
-        (roundPinned(try_divide(po - col("__pe"), lit(1.0) - col("__pe")), 4))
+        roundPinned(col("__po"), 4).as("accuracy_r"),
+        (roundPinned(try_divide(col("__po") - col("__pe"), lit(1.0) - col("__pe")), 4))
           .as("kappa_r"))
   }
 }

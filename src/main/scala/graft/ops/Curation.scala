@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.functions.GraftFunctions.roundPinned
+import graft.plans.RunningTotals
 
 /** Corpus-curation operators for training-data pipelines: deterministic
   * split assignment, stratified sampling, PII redaction, benchmark
@@ -950,13 +951,11 @@ object Curation {
       .agg(
         sum(when(col("__y"), 1L).otherwise(0L)).as("__p"),
         sum(when(col("__y"), 0L).otherwise(1L)).as("__n"))
-    // negatives-strictly-below running count via the partition-parallel
-    // [[PrefixSum]] (r22): the previous unpartitioned window moved the
-    // whole distinct-score frame through ONE task — bounded only when
-    // scores are pre-rounded; a raw continuous score made it a global
-    // sort through a single thread. __s is unique (groupBy key), so the
-    // exclusive ROWS frame is well-defined.
-    val g2 = PrefixSum.withRunningTotals(
+    // Bounded frames use a one-task window; the distinct-score frame is
+    // an unbounded global ordering (a raw continuous score), so the
+    // negatives-strictly-below count is a [[RunningTotals]]. __s is
+    // unique (groupBy key), so the exclusive ROWS frame is well-defined.
+    val g2 = RunningTotals.withRunningTotals(
       g, Seq(col("__s")), Seq("__nb" -> col("__n")), includeCurrent = false)
     g2
       .agg(
@@ -993,16 +992,14 @@ object Curation {
         sum(when(col("__y"), 0L).otherwise(1L)).as("__n"))
     val prec = col("tp").cast("double") / (col("tp") + col("fp")).cast("double")
     val rec = col("tp").cast("double") / col("__ptot").cast("double")
-    // cumulative confusion counts via the partition-parallel
-    // [[PrefixSum]] over score DESC (r22; was two unpartitioned
-    // windows through one task — see binaryEval), and the positives
-    // grand total as a broadcast constant instead of an
-    // unbounded-both-ways window.
-    PrefixSum.withGrandTotals(
-        PrefixSum.withRunningTotals(
-          g, Seq(col("__s").desc),
-          Seq("tp" -> col("__p"), "fp" -> col("__n"))),
-        Seq("__ptot" -> col("__p")))
+    // Bounded frames use a one-task window; the distinct-score frame is
+    // an unbounded global ordering, so the cumulative confusion counts
+    // over score DESC and the positives grand total are one
+    // [[RunningTotals]].
+    RunningTotals.withRunningTotals(
+        g, Seq(col("__s").desc),
+        Seq("tp" -> col("__p"), "fp" -> col("__n")),
+        grandTotals = Seq("__ptot" -> col("__p")))
       .filter(col("__ptot") > 0)
       .select(
         col("__s").as("threshold"), col("tp"), col("fp"),

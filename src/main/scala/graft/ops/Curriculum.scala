@@ -63,14 +63,11 @@ object Curriculum {
     val rows = Sketches.logBucketed(
       df.withColumn("__q", Sketches.quantized(difficulty, scale)), subBits)
     val hist = rows.groupBy(col("m"), col("sub")).agg(count(lit(1)).as("__n"))
-    // Cumulative histogram share: deliberately a single-partition
-    // window, NOT [[PrefixSum]] (r22 A/B). The histogram is BOUNDED
-    // (≤ 64·2^subBits rows — the whole point of the sketch), so the
-    // one-task window costs microseconds, while PrefixSum's machinery
-    // (range exchange + two persists + offset joins) adds measurable
-    // per-query overhead and a rangepartitioning node the corpus-sort
-    // plan pins rightly forbid. PrefixSum is for UNBOUNDED global
-    // orderings (NegSampling vocab CDF, Curation score curves).
+    // Cumulative histogram share: bounded frames use a one-task window,
+    // and unbounded global orderings use [[graft.plans.RunningTotals]].
+    // The histogram is bounded (≤ 64·2^subBits rows — the point of the
+    // sketch), and the corpus-build plan pins forbid the range exchange
+    // RunningTotals would add.
     val cumW = Window.orderBy(col("m"), col("sub"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cdf = hist
@@ -136,8 +133,7 @@ object Curriculum {
       subBits)
     val hist = rows.filter(col("__gate"))
       .groupBy(col("m"), col("sub")).agg(count(lit(1)).as("__n"))
-    // same bounded-histogram single-partition window as phaseAssign
-    // (see the comment there for why NOT PrefixSum)
+    // same bounded-histogram one-task window as phaseAssign
     val cumW = Window.orderBy(col("m"), col("sub"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cdf = hist

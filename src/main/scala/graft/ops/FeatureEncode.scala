@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.roundPinned
 
@@ -57,18 +58,20 @@ object FeatureEncode {
         count(lit(1)).as("n"),
         sum(when(col("__y"), 1L).otherwise(0L)).as("n_pos"))
       .withColumn("n_neg", col("n") - col("n_pos"))
-    val tot = agg.agg(sum(col("n_pos")).as("__tp"), sum(col("n_neg")).as("__tn"))
+    // Bounded frames use a one-task window: the ≤nBuckets-row bucket
+    // frame takes its class totals and the quantized-integer IV sum
+    // (order-free) as windows over the whole frame.
+    val all = Window.partitionBy()
     val sB = smoothing * nBuckets
     val num = (col("n_pos") + lit(smoothing)) / (col("__tp") + lit(sB))
     val den = (col("n_neg") + lit(smoothing)) / (col("__tn") + lit(sB))
-    val withIvt = agg.crossJoin(broadcast(tot))
+    agg
+      .withColumn("__tp", sum(col("n_pos")).over(all))
+      .withColumn("__tn", sum(col("n_neg")).over(all))
       .withColumn("__woe", log(num / den))
       .withColumn("__ivt", (num - den) * col("__woe"))
-    // feature-level IV: quantized-integer sum over the ≤nBuckets rows
-    // as a broadcast grand total (r22) — was an unpartitioned window;
-    // same order-free integer sum, no single-task WindowExec.
-    PrefixSum.withGrandTotals(withIvt,
-        Seq("__ivq" -> roundPinned(col("__ivt") * lit(1e9)).cast("long")))
+      .withColumn("__ivq",
+        sum(roundPinned(col("__ivt") * lit(1e9)).cast("long")).over(all))
       .select(col("segment"), col("n"), col("n_pos"), col("n_neg"),
         (roundPinned(col("__woe"), 4)).as("woe_r"),
         (roundPinned(col("__ivt"), 4)).as("iv_term_r"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.CachedFrames
+import graft.plans.RunningTotals
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.roundPinned
@@ -25,9 +25,9 @@ import graft.functions.GraftFunctions.roundPinned
   *    the sampling path.
   *
   * Scale shape: one corpus scan for frequencies (map-side combined);
-  * the CDF prefix sum is a partition-parallel [[PrefixSum]] (range
-  * exchange + per-partition windows + broadcast offsets — never a
-  * single-task global window); draws are a pure projection of
+  * the vocabulary is an unbounded global ordering, so the CDF prefix
+  * sum and its grand total are one [[RunningTotals]] (bounded frames
+  * use a one-task window instead); draws are a pure projection of
   * (id, slot); the inverse-CDF lookup is a BUCKETED EQUI-join — the
   * CDF explodes each interval to the ≈B·width/total grid buckets it
   * spans (ΣB + vocab rows total) and each draw joins its single
@@ -38,10 +38,17 @@ import graft.functions.GraftFunctions.roundPinned
 object NegSampling {
 
   /** α=0.75-smoothed sampling weights with the integer CDF:
-    * (token, freq, q, cum_lo, cum_hi) where q = round(f^0.75 · 1e6)
+    * (token, freq, q, cum_hi, cum_lo) where q = round(f^0.75 · 1e6)
     * and [cum_lo, cum_hi) tile [0, Σq) in token order.
     */
   def smoothedCdf(
+      freqs: DataFrame,
+      tokenCol: String,
+      freqCol: String): DataFrame =
+    cdfWithTotal(freqs, tokenCol, freqCol).drop("__total")
+
+  /** [[smoothedCdf]] plus `__total` = Σq on every row. */
+  private def cdfWithTotal(
       freqs: DataFrame,
       tokenCol: String,
       freqCol: String): DataFrame = {
@@ -51,14 +58,9 @@ object NegSampling {
       .filter(col(freqCol) > 0)
       .select(col(tokenCol).as("token"), col(freqCol).cast("long").as("freq"))
       .withColumn("q", roundPinned(sqrt(f * sqrt(f)) * lit(1e6)).cast("long"))
-    // Partition-parallel prefix sum (r22): the previous
-    // `sum(q) OVER (ORDER BY token)` was an unpartitioned window — the
-    // ENTIRE vocabulary serialized through one task (a multi-million-
-    // token vocab at corpus scale). Same exact integer cumulative, same
-    // tie semantics (tokens are unique here anyway), numPartitions-way
-    // parallel.
-    PrefixSum.withRunningTotals(
-        weighted, Seq(col("token")), Seq("cum_hi" -> col("q")))
+    RunningTotals.withRunningTotals(
+        weighted, Seq(col("token")), Seq("cum_hi" -> col("q")),
+        grandTotals = Seq("__total" -> col("q")))
       .withColumn("cum_lo", col("cum_hi") - col("q"))
   }
 
@@ -81,8 +83,8 @@ object NegSampling {
       hasher: (Column, Column) => Column = TextAnalysis.h64): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(buckets >= 1, s"buckets must be >= 1: $buckets")
-    val cdf = CachedFrames.persistOnce(smoothedCdf(freqs, tokenCol, freqCol))
-    val total = cdf.agg(max(col("cum_hi")).as("__total"))
+    val cdf = cdfWithTotal(freqs, tokenCol, freqCol)
+    val total = cdf.select(col("__total")).limit(1)
     // Grid step = max(total div B, 1); bucket(x) = x div step. Each CDF
     // interval explodes to the buckets it overlaps — Σ spans ≈ B + vocab.
     // `div`: exact INTEGRAL division (the oracle's `//`) — a double
@@ -94,7 +96,7 @@ object NegSampling {
     // only a join key; the exact interval filter below fixes the result,
     // so the changed bucket boundary function is output-invariant.
     val step = s"greatest(__total div $buckets, 1L)"
-    val bucketed = cdf.crossJoin(broadcast(total))
+    val bucketed = cdf
       .withColumn("__bkt", explode(sequence(
         expr(s"cum_lo div $step"),
         expr(s"(cum_hi - 1) div $step"))))

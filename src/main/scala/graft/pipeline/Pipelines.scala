@@ -5,7 +5,7 @@ import graft.io.Sink.PartitionSpec
 import graft.ops._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, IntegerType, StructType}
+import org.apache.spark.sql.types.{BooleanType, IntegerType, NullType, StructType}
 
 /** The three medallion pipelines, re-expressed Spark-first.
   *
@@ -124,6 +124,19 @@ object Pipelines {
     df
   }
 
+  /** Read a silver table back with `date_year` integer-typed, as the
+    * clean wrote it. When every date failed to parse, all rows sit in
+    * the null partition and partition discovery types the column VOID,
+    * which no writer can partition by; the reference's Iceberg table
+    * keeps its declared type there.
+    */
+  private def readSilver(spark: SparkSession, path: String): DataFrame = {
+    val df = spark.read.parquet(path)
+    if (df.schema.exists(f => f.name == "date_year" && f.dataType == NullType))
+      df.withColumn("date_year", col("date_year").cast(IntegerType))
+    else df
+  }
+
   /** Enrich (`enrich.py`): OBT join of fact to prefixed dims + write.
     * `dimensions` maps entityType → input path, mirroring the
     * reference's --dimension_inputs/--dimension_entity_types CLI pair.
@@ -136,9 +149,9 @@ object Pipelines {
     Enrich.spjConfigs.foreach { case (k, v) =>
       try spark.conf.set(k, v) catch { case _: Exception => () }
     }
-    val fact = spark.read.parquet(cfg.input)
+    val fact = readSilver(spark, cfg.input)
     val dims = dimensions.map { case (entityType, path) =>
-      Enrich.Dim(entityType, spark.read.parquet(path), Enrich.yelpJoinKey(entityType))
+      Enrich.Dim(entityType, readSilver(spark, path), Enrich.yelpJoinKey(entityType))
     }
     val obt = Enrich.oneBigTable(fact, dims)
     write(obt, cfg.output, cfg.spec)

@@ -1094,10 +1094,10 @@ object LlmQueries {
   private def mediaFixtureJson(s: SparkSession)(path: String) =
     s.read.schema("id LONG, b64 STRING").json(path)
 
-  val imagesFixture = "/root/repo/fixtures/images.ndjson"
-  val audioFixture = "/root/repo/fixtures/audio.ndjson"
-  val gifsFixture = "/root/repo/fixtures/gifs.ndjson"
-  val bmpsFixture = "/root/repo/fixtures/bmps.ndjson"
+  val imagesFixture = Fixtures.path("images.ndjson")
+  val audioFixture = Fixtures.path("audio.ndjson")
+  val gifsFixture = Fixtures.path("gifs.ndjson")
+  val bmpsFixture = Fixtures.path("bmps.ndjson")
 
   /** Shared dHash-replay CTEs for the BMP fixture oracles, ending in
     * `ph(id, w, h, hi, lo)` — the 64-bit dHash as two u32 halves

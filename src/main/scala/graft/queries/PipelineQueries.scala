@@ -17,11 +17,11 @@ import org.apache.spark.sql.functions._
   */
 object PipelineQueries {
 
-  val businessFixture = "/root/repo/fixtures/business.ndjson"
-  val checkinFixture = "/root/repo/fixtures/checkin.ndjson"
-  val reviewFixture = "/root/repo/fixtures/review.ndjson"
-  val tipFixture = "/root/repo/fixtures/tip.ndjson"
-  val userFixture = "/root/repo/fixtures/user.ndjson"
+  val businessFixture = Fixtures.path("business.ndjson")
+  val checkinFixture = Fixtures.path("checkin.ndjson")
+  val reviewFixture = Fixtures.path("review.ndjson")
+  val tipFixture = Fixtures.path("tip.ndjson")
+  val userFixture = Fixtures.path("user.ndjson")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = scala.collection.immutable.ListMap(
 

@@ -532,6 +532,35 @@ class PlanAuditSpec extends SparkSpec {
     assert(!plan.contains("c_name"), "non-QI columns must not be read")
   }
 
+  test("score curves and the vocabulary CDF plan RunningTotals: no cache, no offsets") {
+    // frames earlier suites left cached would be substituted into the plan
+    CachedFrames.unpersistAll()
+    for (name <- Seq("q_filter_auc", "q_pr_curve", "q_negative_sampling")) {
+      val plan = planOf(name)
+      assert(plan.matches("""(?s).*\(\d+\) RunningTotals\b.*"""),
+        s"$name must plan the RunningTotals exec:\n$plan")
+      assert(!plan.contains("InMemoryRelation") && !plan.contains("InMemoryTableScan"),
+        s"$name must not persist its ordered frame:\n$plan")
+      // both passes read one shuffle: no partition-id stamping and no
+      // offsets window joined back onto the frame
+      assert(!plan.toLowerCase.contains("spark_partition_id"), s"$name:\n$plan")
+      assert(!plan.linesIterator.exists(_.matches("""\(\d+\) Window.*""")),
+        s"$name must not plan an offsets window:\n$plan")
+    }
+  }
+
+  test("q_classifier_report: one class aggregation and a one-task window, no products") {
+    CachedFrames.unpersistAll()
+    val plan = planOf("q_classifier_report")
+    for (node <- Seq("InMemoryRelation", "CartesianProduct", "BroadcastNestedLoopJoin"))
+      assert(!plan.contains(node), s"unexpected $node:\n$plan")
+    // below the display sort's range exchange: the class groupBy's hash
+    // exchange and the totals window's single-partition gather
+    val below = plan.linesIterator.count(l =>
+      l.contains("Arguments: hashpartitioning") || l.contains("Arguments: SinglePartition"))
+    assert(below <= 2, s"expected at most two exchanges below the sort:\n$plan")
+  }
+
   test("pageRank iterations pay ONE edge-list join each — degree pre-fused") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -40,6 +40,24 @@ class RunAllSpec extends SparkSpec {
     assert(err.getMessage.contains("extract/user"))
   }
 
+  test("run-all survives checkins whose dates all fail to parse") {
+    // date-only checkin stamps miss the clean's "yyyy-MM-dd HH:mm:ss"
+    // format, so every silver checkin row lands in the null date_year
+    // partition; enrich must still read it back integer-typed
+    val input = Files.createTempDirectory("run-all-dateonly")
+    for (e <- Seq("user", "business", "review", "tip"))
+      Files.copy(java.nio.file.Paths.get(s"fixtures/$e.ndjson"), input.resolve(s"$e.ndjson"))
+    Files.writeString(input.resolve("checkin.ndjson"),
+      """{"business_id":"b01","date":"2016-04-26, 2016-08-30"}
+        |{"business_id":"b02","date":"2021-01-02"}
+        |""".stripMargin)
+    val lake = Files.createTempDirectory("run-all-dateonly-lake").toString
+    RunAll.run(spark, input.toString, lake)
+    assert(spark.read.parquet(s"$lake/silver/checkin_obt").count() == 3)
+    assert(new java.io.File(s"$lake/silver/checkin_obt").list().toSeq
+      .filter(_.startsWith("date_year=")) == Seq("date_year=__HIVE_DEFAULT_PARTITION__"))
+  }
+
   test("enrich dispatch rejects unpaired dimension flags, incl. single-dim") {
     // "".split(",") is Array("") of length 1 — a forgotten flag used to
     // pair up with a lone real entry and silently drop the dimension
