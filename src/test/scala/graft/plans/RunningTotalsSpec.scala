@@ -69,9 +69,15 @@ class RunningTotalsSpec extends SparkSpec {
   private val cpus = Runtime.getRuntime.availableProcessors
 
   test("equals the one-task window over 1, 7 and 2×cpus partitions, AQE on and off") {
-    for (parts <- Seq(1, 7, 2 * cpus); aqe <- Seq(true, false))
-      withConf("spark.sql.shuffle.partitions" -> parts.toString,
-          "spark.sql.adaptive.enabled" -> aqe.toString) {
+    // AQE coalesces these small shuffles to one partition; the middle
+    // mode keeps AQE but not the coalescing, so offsets are exercised
+    val aqeModes = Seq(
+      "on" -> Seq("spark.sql.adaptive.enabled" -> "true"),
+      "on, uncoalesced" -> Seq("spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false"),
+      "off" -> Seq("spark.sql.adaptive.enabled" -> "false"))
+    for (parts <- Seq(1, 7, 2 * cpus); (aqe, aqeConf) <- aqeModes)
+      withConf(("spark.sql.shuffle.partitions" -> parts.toString) +: aqeConf: _*) {
         for ((n, seed) <- Seq(0 -> 1L, 1 -> 2L, 37 -> 3L, 3000 -> 4L); s <- shapes) {
           val df = frame(n, seed)
           assert(rows(viaOperator(df, s)) == rows(viaWindow(df, s)),
@@ -81,7 +87,7 @@ class RunningTotalsSpec extends SparkSpec {
   }
 
   test("results do not depend on cached frames dropped between build and execution") {
-    withConf("spark.sql.shuffle.partitions" -> "7") {
+    withConf("spark.sql.shuffle.partitions" -> "7", "spark.sql.adaptive.enabled" -> "false") {
       val base = CachedFrames.persistOnce(frame(2000, 5L))
       base.count()
       val s = shapes(1)
