@@ -65,21 +65,18 @@ object DevProfile {
       else if (args.nonEmpty) args.toSeq
       else Seq("q_pipeline_corpus", "q_pipeline_curation_best",
         "q_pipeline_curation", "q_pagerank", "q_pca_whiten", "q_bpe_encode")
-    val spark = SparkSession.builder()
+    val spark = SessionDefaults.steadyState(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
       // A/B knobs for size-based AQE partition coalescing (guide §2.2):
       // parallelismFirst=false lets AQE coalesce post-shuffle partitions
       // to advisory byte size instead of pinning to defaultParallelism.
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
         sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY_SIZE", "64MB"))
+        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY_SIZE", "64MB")))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val acc = new Acc

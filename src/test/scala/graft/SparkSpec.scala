@@ -5,17 +5,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session —
   * `getOrCreate` returns the same instance across suites, which keeps
-  * the full `sbt test` run to a single Spark startup).
+  * the full `sbt test` run to a single Spark startup). It is built
+  * through [[SessionDefaults]], so the tests run on the entry points'
+  * file system and codegen-cache settings.
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = SessionDefaults.steadyState(SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -33,11 +33,63 @@ class RunAllSpec extends SparkSpec {
         .exists(_.getName.startsWith("date_year=")), s"silver/$e partitioning")
     }
 
-    // a failing job names itself
+    // a failing job names itself; with every extract failing, that is
+    // the first in the reference's order
     val err = intercept[RuntimeException] {
       RunAll.run(spark, "/nonexistent-input-dir", s"$lake/broken")
     }
     assert(err.getMessage.contains("extract/user"))
+  }
+
+  private def committed(table: String): Boolean =
+    Files.exists(java.nio.file.Paths.get(table, "_SUCCESS"))
+
+  private def commitNanos(table: String): Long =
+    Files.getLastModifiedTime(java.nio.file.Paths.get(table, "_SUCCESS"))
+      .to(java.util.concurrent.TimeUnit.NANOSECONDS)
+
+  test("run-all returns its 13 jobs in commit order, each after its inputs") {
+    val lake = Files.createTempDirectory("run-all-order").toString
+    val jobs = RunAll.run(spark, "fixtures", lake)
+    val names = jobs.map(_._1)
+    assert(names.distinct.size == 13)
+    assert(names.toSet == Set("extract", "clean").flatMap(s =>
+      Seq("user", "business", "review", "checkin", "tip").map(e => s"$s/$e")) ++
+      Seq("review", "checkin", "tip").map(e => s"enrich/$e"))
+    val at = jobs.map { case (name, out) => name -> commitNanos(out) }
+    assert(at.map(_._2) == at.map(_._2).sorted, at.mkString(", "))
+    val when = at.toMap
+    for ((fact, dims) <- Seq("review" -> Seq("business", "user"),
+        "checkin" -> Seq("business"), "tip" -> Seq("business", "user"));
+        dep <- fact +: dims) {
+      assert(names.indexOf(s"clean/$dep") < names.indexOf(s"enrich/$fact"))
+      assert(when(s"clean/$dep") <= when(s"enrich/$fact"), s"enrich/$fact before clean/$dep")
+    }
+    for (e <- Seq("user", "business", "review", "checkin", "tip"))
+      assert(names.indexOf(s"extract/$e") < names.indexOf(s"clean/$e"))
+  }
+
+  test("a failed extract stops the DAG, names itself, and leaves only whole tables") {
+    val input = Files.createTempDirectory("run-all-nobusiness")
+    for (e <- Seq("user", "review", "checkin", "tip"))
+      Files.copy(java.nio.file.Paths.get(s"fixtures/$e.ndjson"), input.resolve(s"$e.ndjson"))
+    val lake = Files.createTempDirectory("run-all-nobusiness-lake").toString
+    val err = intercept[RuntimeException] { RunAll.run(spark, input.toString, lake) }
+    assert(err.getMessage.contains("extract/business"), err.getMessage)
+    // every OBT joins business: none is written
+    for (e <- Seq("review", "checkin", "tip"))
+      assert(!new java.io.File(s"$lake/silver/${e}_obt").exists(), s"silver/${e}_obt")
+    // jobs in flight at the failure ran to their commit: whatever the
+    // user chain wrote is whole
+    val users = spark.read.json("fixtures/user.ndjson").count()
+    assert(committed(s"$lake/bronze/user"))
+    for (layer <- Seq("bronze", "silver"); t = s"$lake/$layer/user"; if new java.io.File(t).exists) {
+      assert(committed(t), t)
+      assert(spark.read.parquet(t).count() == users, t)
+    }
+    for (layer <- Seq("bronze", "silver"); dir <- Option(new java.io.File(s"$lake/$layer").listFiles)
+        .toSeq.flatten)
+      assert(committed(dir.toString), s"$dir has no _SUCCESS")
   }
 
   test("run-all survives checkins whose dates all fail to parse") {
