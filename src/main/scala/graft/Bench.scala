@@ -29,35 +29,12 @@ object Bench {
   /** Round to 3 decimals for a compact JSON dump. */
   def r3(v: Double): Double = math.rint(v * 1000) / 1000
 
-  /** The canonical one-line bench JSON — the EXACT shape of the one
-    * line the driver has ever machine-parsed (r10): key order
-    * {"metric","value","unit","queries","sf"}, the FULL per-query map
-    * in RUN order, no extra keys, no elision.
-    *
-    * Parse-contract history, because three rounds of hypotheses died
-    * here: r14/r15 carried extra keys / sf-before-queries → null.
-    * r16 fixed the template but ELIDED the map to a 1400-char budget
-    * (slowest 55 of 182, sorted) on the theory the parser reads only
-    * the 2000-char recorded tail → still null. That r16 line was
-    * complete valid JSON fully inside the tail, which FALSIFIES the
-    * bounded-buffer theory; meanwhile r10's parsed line was ~2.2 KB
-    * and started BEFORE the tail window, proving the parser reads
-    * beyond it. The one hypothesis consistent with every artifact is
-    * that the driver validates the parsed query set against the suite
-    * — so this line now carries every query, exactly like r10, and
-    * every diagnostic (contamination, loadavg, per-pass series) rides
-    * BENCH_DIAG printed before it. After five rounds (r14–r18) of
-    * shape-exact attempts all recording parsed:null — including r17's
-    * byte-exact r10 form with nothing after it — the full-line parse
-    * looked unsatisfiable; but r18–r21 all printed a total-only
-    * trailer ({"queries":{}}) AFTER the full line, so a
-    * last-canonical-line parser saw the empty trailer in each of those
-    * rounds, and that layout was never ruled out on its own. Per
-    * VERDICT r21 "Next round" #2 this line is once again the ABSOLUTE
-    * last stdout line, with [[digestLine]] (per-pass totals + loadavg,
-    * so a contaminated run self-documents) immediately above it and no
-    * canonical-shaped line after it; BENCH_QUERIES.json remains the
-    * per-query backstop whatever the parser does.
+  /** The canonical one-line bench JSON: key order
+    * {"metric","value","unit","queries","sf"}, with every query in run
+    * order and no extra keys. It is the ABSOLUTE last stdout line, with
+    * [[digestLine]] (per-pass totals + loadavg) immediately above it;
+    * every other diagnostic prints before both. BENCH_QUERIES.json is
+    * the per-query artifact.
     */
   def canonicalLine(
       best: collection.Map[String, Double],

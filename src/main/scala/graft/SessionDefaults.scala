@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Long-lived-driver steady-state session configuration, shared by
   * every entry point ([[Main]], [[Bench]], [[Verify]]), the benchmark
-  * harness, the test session and `DevProfile`, so an embedder running
+  * harness and the test session, so an embedder running
   * this 200-plan library gets the same JVM behavior the bench measures.
   *
   * The first two values are env-overridable and NOT local[32]-specific

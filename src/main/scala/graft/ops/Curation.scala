@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 import graft.functions.GraftFunctions.roundPinned
 import graft.plans.RunningTotals
 
@@ -20,9 +19,10 @@ import graft.plans.RunningTotals
   *     shuffle, cost is one map pass at any scale;
   *   - decontamination broadcasts the (small by definition) benchmark
   *     side and streams the corpus;
-  *   - packing pays exactly one range shuffle — the unavoidable price
-  *     of a globally ordered layout — plus a per-partition-offsets
-  *     count job (bounded driver data: numPartitions longs);
+  *   - packing and mixing are [[RunningTotals]] running sums: one
+  *     range shuffle — the unavoidable price of a globally ordered
+  *     layout — read twice (a per-partition totals job, then the
+  *     output pass), no persist;
   *   - vocabulary is a map-side-combined hash agg + bounded top-k
   *     (TakeOrderedAndProject — no global sort).
   *
@@ -351,21 +351,21 @@ object Curation {
   /** Token-budget sequence packing (concat-and-chunk): documents are
     * laid out in `idCol` order, token counts accumulate, and each doc
     * is stamped with the `budget`-sized pack it starts in
-    * (`pack_id = floor(tokens_before / budget)`) and its offset within
+    * (`pack_id = tokens_before div budget`) and its offset within
     * that pack — the deterministic "concatenate the corpus and cut
     * every `budget` tokens" layout pre-training batch assembly uses
     * (documents may straddle a boundary; the consumer splits or drops
     * the remainder).
     *
-    * Same two-pass partition-offset shape as
-    * [[Surrogate.withSequentialId]] — a prefix sum, NOT a global
-    * window: range-shuffle by id, per-partition token totals (one
-    * lightweight job, numPartitions longs to the driver), then each
-    * partition computes its running sum independently from its
-    * offset. No single-task bottleneck at any scale.
+    * `tokens_before` is an exclusive running sum on [[RunningTotals]]
+    * (`includeCurrent = false`): one range shuffle by `idCol`, read
+    * twice by the exec (per-partition token totals, then the output
+    * pass), with no persist and no single-task global window. Ids must
+    * be unique per row; rows with tied ids get an arbitrary order.
     *
-    * `tokenCol` must be a non-null LongType column (e.g.
-    * [[TextAnalysis.bpeTokenCount]] materialized by the caller).
+    * `tokenCol` must be an integral column (e.g.
+    * [[TextAnalysis.bpeTokenCount]] materialized by the caller); NULL
+    * counts as 0 tokens.
     */
   def packSequences(
       df: DataFrame,
@@ -379,34 +379,12 @@ object Curation {
       packShadowing.isEmpty,
       s"packSequences appends output columns ${packReserved.mkString("/")}; " +
         s"rename the existing: ${packShadowing.mkString(", ")}")
-    val spark = df.sparkSession
-    // Both passes (the offsets pre-pass collect below and the caller's
-    // eventual action on the packed frame) scan this sorted frame:
-    // persist it once so the shuffle+sort is paid once, not twice
-    // (measured 2× end-to-end on the MixProbe replica corpus). The
-    // plan-keyed registry dedupes repeated calls; the caller releases
-    // via CachedFrames.unpersistAll() as everywhere else.
-    val sorted = graft.CachedFrames.persistOnce(
-      df.repartitionByRange(col(idCol)).sortWithinPartitions(col(idCol)))
-    val rdd = sorted.rdd
-    val tokIdx = sorted.schema.fieldIndex(tokenCol)
-    val partSums = rdd
-      .mapPartitions(it => Iterator.single(it.foldLeft(0L)(_ + _.getLong(tokIdx))))
-      .collect()
-    val offsets = partSums.scanLeft(0L)(_ + _)
-    val packed = rdd.mapPartitionsWithIndex { (pi, it) =>
-      var cum = offsets(pi)
-      it.map { row =>
-        val out = Row.fromSeq(row.toSeq :+ (cum / budget) :+ (cum % budget))
-        cum += row.getLong(tokIdx)
-        out
-      }
-    }
-    spark.createDataFrame(
-      packed,
-      sorted.schema
-        .add("pack_id", LongType, nullable = false)
-        .add("pack_offset", LongType, nullable = false))
+    val before = col("__pack_before")
+    RunningTotals.withRunningTotals(df, Seq(col(idCol)),
+        Seq("__pack_before" -> col(tokenCol)), includeCurrent = false)
+      .select(df.columns.map(df(_)) :+
+        call_function("div", before, lit(budget)).as("pack_id") :+
+        (before % lit(budget)).as("pack_offset"): _*)
   }
 
   /** Temperature-scaled source mixing weights — the standard
@@ -484,17 +462,21 @@ object Curation {
     *
     * Scale shape: the naive form is `sum(tokens) OVER (PARTITION BY
     * source ORDER BY hash)`, which serializes each source through ONE
-    * window task — with 5-20 sources over 100 TB that is 5-20 tasks
-    * doing all the work. Instead this reuses the [[packSequences]]
-    * partition-offset prefix sum, generalized per-source: range-shuffle
-    * by (source, hash), collect per-partition PER-SOURCE token totals
-    * (bounded driver data: ≤ numPartitions × |sources| longs), then
-    * every partition computes its rows' running sums independently
-    * from its offsets. Parallelism stays at numPartitions regardless
-    * of how few sources there are.
+    * window task. Instead this is one exclusive running sum on
+    * [[RunningTotals]] (`includeCurrent = false`) over the global
+    * order `(source, hash, idCol)`, plus one grand total per weighted
+    * source; the exec reads its one range shuffle twice (totals job,
+    * then output pass), with no persist. A row's per-source sum is the
+    * global running sum minus the grand totals of every source that
+    * sorts before its own (`source > sⱼ`, Spark's string order — the
+    * order the range shuffle used). Parallelism stays at the shuffle's
+    * partition count regardless of how few sources there are. `idCol`
+    * must be unique per row; tied `(source, hash, id)` rows take an
+    * arbitrary order.
     *
-    * `tokenCol` must be a non-null LongType column (e.g.
-    * [[TextAnalysis.bpeTokenCount]] materialized by the caller).
+    * `tokenCol` must be an integral column (e.g.
+    * [[TextAnalysis.bpeTokenCount]] materialized by the caller); NULL
+    * counts as 0 tokens.
     *
     * FP convention: allocations are `floor(tokenBudget × wₛ / Σw)`
     * evaluated in double precision. For weight ratios that are not
@@ -523,53 +505,29 @@ object Curation {
       s"mixSources reserves column names ${mixReserved.mkString("/")} for " +
         s"internal staging and output; rename: ${shadowing.mkString(", ")}")
     val totalW = weights.map(_._2).sum
-    val allocs = weights.map { case (s, w) =>
-      s -> math.floor(tokenBudget * w / totalW).toLong
-    }.toMap
-    val spark = df.sparkSession
+    val source = col(sourceCol)
+    val sources = weights.map(_._1)
+    val allocs = weights.map { case (s, w) => s -> math.floor(tokenBudget * w / totalW).toLong }
+    val allocation = allocs.tail.foldLeft(when(source === allocs.head._1, allocs.head._2)) {
+      case (c, (s, a)) => c.when(source === s, a)
+    }
+    val grand = sources.indices.map(j => s"__mix_n$j")
 
     val keyed = df
-      .filter(col(sourceCol).isin(weights.map(_._1): _*))
+      .filter(source.isin(sources: _*))
       .withColumn("__mix_h", hasher(lit(seed.toString), col(idCol).cast("string")))
-    // Persist across the two passes (per-source offsets pre-pass + the
-    // caller's action): without it the range shuffle + sort runs twice
-    // — measured 2× end-to-end slower than even the single-task-window
-    // form at 5M rows (MixProbe). Plan-keyed, released by
-    // CachedFrames.unpersistAll().
-    val sorted = graft.CachedFrames.persistOnce(keyed
-      .repartitionByRange(col(sourceCol), col("__mix_h"), col(idCol))
-      .sortWithinPartitions(col(sourceCol), col("__mix_h"), col(idCol)))
-    val rdd = sorted.rdd
-    val srcIdx = sorted.schema.fieldIndex(sourceCol)
-    val tokIdx = sorted.schema.fieldIndex(tokenCol)
-
-    // Lightweight pre-pass: per-partition, per-source token totals.
-    val partSums: Array[Map[String, Long]] = rdd.mapPartitions { it =>
-      val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      it.foreach { r =>
-        val s = r.getString(srcIdx)
-        m.update(s, m.getOrElse(s, 0L) + r.getLong(tokIdx))
-      }
-      Iterator.single(m.toMap)
-    }.collect()
-    // offsets(pi)(src) = tokens of `src` in partitions before pi.
-    val offsets: Array[Map[String, Long]] = partSums.scanLeft(Map.empty[String, Long]) {
-      (acc, m) => m.foldLeft(acc) { case (a, (s, t)) => a.updated(s, a.getOrElse(s, 0L) + t) }
-    }.init
-
-    val allocB = spark.sparkContext.broadcast(allocs)
-    val mixed = rdd.mapPartitionsWithIndex { (pi, it) =>
-      val cum = scala.collection.mutable.Map[String, Long](offsets(pi).toSeq: _*)
-      it.flatMap { row =>
-        val s = row.getString(srcIdx)
-        val before = cum.getOrElse(s, 0L)
-        cum.update(s, before + row.getLong(tokIdx))
-        if (before < allocB.value(s)) Some(Row.fromSeq(row.toSeq :+ before)) else None
-      }
-    }
-    spark.createDataFrame(
-        mixed, sorted.schema.add("mix_tokens_before", LongType, nullable = false))
-      .drop("__mix_h")
+    val totals = RunningTotals.withRunningTotals(keyed,
+      Seq(source, col("__mix_h"), col(idCol)),
+      Seq("__mix_run" -> col(tokenCol)),
+      includeCurrent = false,
+      grandTotals = sources.zip(grand).map { case (s, g) => g -> when(source === s, col(tokenCol)) })
+    val earlierSources = sources.zip(grand)
+      .map { case (s, g) => when(source > s, col(g)).otherwise(0L) }
+      .reduce(_ + _)
+    val before = col("__mix_run") - earlierSources
+    totals
+      .filter(before < allocation)
+      .select(df.columns.map(df(_)) :+ before.as("mix_tokens_before"): _*)
   }
 
   /** Top-`k` whitespace-token vocabulary by corpus frequency, ranked

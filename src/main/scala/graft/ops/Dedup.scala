@@ -166,8 +166,8 @@ object Dedup {
     * on pair ids), so the interpreted cost is proportional to the
     * candidate set — while the repack paid a window sort plus a
     * post-union groupBy exchange per call regardless. Isolated
-    * steady-state A/B (DevProfile, iters=4, drained host, identical
-    * session): repack → lambda moved q_dedup_capped 4.63 → 2.35 s,
+    * steady-state A/B (iters=4, drained host, identical session):
+    * repack → lambda moved q_dedup_capped 4.63 → 2.35 s,
     * q_dedup_verified 2.54 → 1.94 s, q_fuzzy_join 1.03 → 1.13 s,
     * q_fuzzy_capped 1.19 → 1.21 s — net ≈ −2.8 s, matching the
     * r20→r21 drained-floor regression the repack caused. The

@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import graft.plans.RunningTotals
 
 /** Surrogate-key generation (F4).
   *
@@ -17,12 +17,7 @@ import org.apache.spark.sql.types.LongType
   *     counter embedded in the upper bits, zero shuffle, ids unique
   *     but not dense and not reproducible across layouts.
   *   - [[withSequentialId]] — deterministic dense 0-based id by key
-  *     order, computed with the partition-offset (zipWithIndex) shape:
-  *     range-repartition + local sort, one small job counting rows per
-  *     partition, then `offset(partition) + local index`. Every
-  *     partition works independently — no single-partition global
-  *     window (the naive `row_number() OVER (ORDER BY …)` funnels the
-  *     entire dataset through one task and OOMs at scale).
+  *     order: an exclusive running count on [[RunningTotals]].
   */
 object Surrogate {
 
@@ -33,29 +28,16 @@ object Surrogate {
   def withUniqueId(df: DataFrame, name: String): DataFrame =
     df.withColumn(name, uniqueId)
 
-  /** Deterministic dense 0-based id ordered by `keys` (which must be a
-    * total order for full determinism; ties get an arbitrary but
-    * stable-within-run order).
+  /** Dense 0-based id ordered by `keys`: the exclusive running count of
+    * rows (`includeCurrent = false`, ROWS .. 1 PRECEDING), so every row
+    * gets a distinct id in 0..n-1 even when keys tie. Which tied row
+    * takes which id is arbitrary, so `keys` must be unique per row for
+    * the ids to be deterministic.
     *
-    * Cost: one range-shuffle + local sort (the unavoidable price of a
-    * globally ordered dense sequence) + one lightweight count job for
-    * the per-partition offsets. No partition ever holds more than its
-    * range share — scales to any row count.
+    * Cost: one range shuffle by `keys`, read twice by the exec (a
+    * per-partition count job, then the output pass); no persist and no
+    * single-task global window.
     */
-  def withSequentialId(df: DataFrame, name: String, keys: Column*): DataFrame = {
-    val spark = df.sparkSession
-    // zipWithIndex's internal count job and the caller's action both
-    // scan the sorted frame — persist once so the range shuffle + sort
-    // is paid once (plan-keyed; released by CachedFrames.unpersistAll).
-    val sorted = graft.CachedFrames.persistOnce(
-      df.repartitionByRange(keys: _*).sortWithinPartitions(keys: _*))
-    val rdd = sorted.rdd
-    // zipWithIndex = count job over all-but-last partition + broadcast
-    // of the cumulative offsets; indices follow partition order, which
-    // repartitionByRange makes identical to global key order.
-    val withId = rdd.zipWithIndex().map { case (row, idx) =>
-      Row.fromSeq(row.toSeq :+ idx)
-    }
-    spark.createDataFrame(withId, sorted.schema.add(name, LongType, nullable = false))
-  }
+  def withSequentialId(df: DataFrame, name: String, keys: Column*): DataFrame =
+    RunningTotals.withRunningTotals(df, keys, Seq(name -> lit(1L)), includeCurrent = false)
 }

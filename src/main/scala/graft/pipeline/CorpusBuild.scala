@@ -25,12 +25,14 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one pass over the corpus feeds dedup + stats; the
   * only exchanges are the LSH bucket join (capped), the
-  * decontamination gram join (bench side small), the per-source
-  * window (mix) and the id-ordered prefix sum (pack). Split is a pure
-  * projection; curriculum adds one broadcast join against a
-  * bounded-histogram CDF. Everything downstream of the quality gate
-  * reuses the persistOnce'd dedup+quality prefix shared with the
-  * standalone curation queries.
+  * decontamination gram join (bench side small), and the two
+  * `RunningTotals` range shuffles: mix by (source, hash, id), pack by
+  * id. Split is a pure projection; curriculum adds one broadcast join
+  * against a bounded-histogram CDF, whose histogram side re-reads
+  * the packed frame (nothing past the quality gate is persisted).
+  * Everything downstream of the quality gate reuses the
+  * persistOnce'd dedup+quality prefix shared with the standalone
+  * curation queries.
   *
   * Determinism: every stage is a pure function of (row, seed) — no
   * rand(), no timestamps — so a re-run, a task retry, or a different
@@ -90,13 +92,10 @@ object CorpusBuild {
     val contaminated = Curation.decontaminate(quality, bench, "text", "doc_id",
         shingleN = cfg.shingleN, minShared = 2L)
       .select("doc_id").distinct()
-    // Project BEFORE mix/pack (r22, guide §2.3/§8): the two range
-    // shuffles and RDD row-conversion passes must move only the four
-    // columns the rest of the DAG reads, never `text` — and this is
-    // the exact plan the standalone curation queries build, so the
-    // sorted mix frame persistOnce-shares across the trio.
+    // mix and pack are RunningTotals plans: column pruning reaches
+    // through them, so their two range shuffles move only the columns
+    // the select below keeps, never `text`
     val clean = quality.join(contaminated, Seq("doc_id"), "left_anti")
-      .select("doc_id", "source", "n_tokens", "bpe_tokens")
     val mixed = Curation.mixSources(clean, "doc_id", "source", "n_tokens",
       cfg.mix, tokenBudget = cfg.tokenBudget, seed = cfg.mixSeed, hasher = hasher)
     val packed = Curation.packSequences(mixed, "doc_id", "bpe_tokens", cfg.packTokens)

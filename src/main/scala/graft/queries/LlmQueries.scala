@@ -783,13 +783,10 @@ object LlmQueries {
       val contaminated = Curation.decontaminate(quality, bench, "text", "doc_id",
           shingleN = 3, minShared = 2L)
         .select("doc_id").distinct()
-      // Project BEFORE the mix/pack stages (r22, guide §2.3/§8): they
-      // range-shuffle twice and run RDD row-conversion passes that
-      // defeat column pruning, and nothing downstream reads `text` or
-      // the unused stat columns — only these four narrow columns need
-      // to move.
+      // mix and pack are RunningTotals plans, so column pruning reaches
+      // through them: their two range shuffles move only the columns
+      // the final select reads, never `text`
       val clean = quality.join(contaminated, Seq("doc_id"), "left_anti")
-        .select("doc_id", "source", "n_tokens", "bpe_tokens")
       val mixed = Curation.mixSources(clean, "doc_id", "source", "n_tokens",
         Seq("src0" -> 0.5, "src1" -> 0.25, "src7" -> 0.25),
         tokenBudget = 2000L, seed = 13L, hasher = TextAnalysis.h64)
@@ -825,11 +822,8 @@ object LlmQueries {
       val contaminated = Curation.decontaminate(quality, bench, "text", "doc_id",
           shingleN = 3, minShared = 2L)
         .select("doc_id").distinct()
-      // same narrow projection before mix/pack as q_pipeline_curation
-      // (r22, guide §2.3/§8) — and the same plan CorpusBuild builds, so
-      // the sorted mix frame persistOnce-shares with q_pipeline_corpus
+      // the same mix/pack stages CorpusBuild runs
       val clean = quality.join(contaminated, Seq("doc_id"), "left_anti")
-        .select("doc_id", "source", "n_tokens", "bpe_tokens")
       val mixed = Curation.mixSources(clean, "doc_id", "source", "n_tokens",
         Seq("src0" -> 0.5, "src1" -> 0.25, "src7" -> 0.25),
         tokenBudget = 2000L, seed = 13L, hasher = TextAnalysis.h64)

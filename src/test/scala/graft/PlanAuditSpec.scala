@@ -14,6 +14,13 @@ class PlanAuditSpec extends SparkSpec {
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
   }
 
+  /** The node blocks of a formatted explain ("(n) Exchange",
+    * "Input [k]: [...]", "Arguments: rangepartitioning(...)") that are
+    * range exchanges. */
+  private def rangeExchanges(plan: String): Seq[String] =
+    plan.split("\n\n").toSeq.filter(b =>
+      b.trim.matches("""(?s)\(\d+\) Exchange\b.*""") && b.contains("rangepartitioning"))
+
   test("q_dedup_incremental joins store and increment on the band equi-key") {
     val plan = planOf("q_dedup_incremental")
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
@@ -43,11 +50,19 @@ class PlanAuditSpec extends SparkSpec {
     val plan = frame.queryExecution
       .explainString(ExplainMode.fromString("formatted"))
     // the gated curriculum keeps the split+phase stages exchange-free:
-    // no global sort anywhere, no sort-merge join back on doc_id
-    assert(!plan.contains("rangepartitioning") && !plan.contains("RangePartitioning"),
-      "corpus build must not introduce a global sort")
-    assert(!plan.contains("SortMergeJoin"),
-      "curriculum must read the broadcast CDF, not re-join the corpus on doc_id")
+    // the only global sorts are mix's (source, hash, id) and pack's id
+    // orders, which curation_best plans too, and there is no
+    // sort-merge join back on doc_id
+    val leadingKeys = rangeExchanges(plan).flatMap(b =>
+      """rangepartitioning\((\w+)#""".r.findFirstMatchIn(b).map(_.group(1)))
+    assert(leadingKeys.nonEmpty && leadingKeys.forall(Set("source", "doc_id")),
+      s"corpus build must not add a global sort beyond mix and pack:\n$plan")
+    // split and curriculum sit above pack's RunningTotals; the
+    // dedup/decontamination joins below it plan as they do in
+    // curation_best
+    val curriculum = plan.linesIterator.takeWhile(!_.contains("RunningTotals")).mkString("\n")
+    assert(curriculum.contains("BroadcastHashJoin") && !curriculum.contains("SortMergeJoin"),
+      s"curriculum must read the broadcast CDF, not re-join the corpus on doc_id:\n$curriculum")
     CachedFrames.unpersistAll()
   }
 
@@ -141,33 +156,39 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("q_pipeline_curation's relational prefix broadcasts small sides, no cartesian") {
-    // The full query's explain is opaque — mixSources/packSequences
-    // materialize through partition-offset RDD passes, so the final
-    // plan is one Scan ExistingRDD. Audit the relational prefix
-    // (dedup → quality → decontaminate-anti) that feeds them, built
-    // exactly as the query builds it.
-    import org.apache.spark.sql.functions._
-    import graft.ops.{Curation, Dedup, TextAnalysis}
-    val d = Tables.documents(spark, sf001)
-    val corpus = d.filter(col("doc_id") >= 25)
-    val bench = d.filter(col("doc_id") < 25)
-    val deduped = Dedup.dedupNear(corpus, "text", "doc_id",
-      k = 16, bands = 8, shingleN = 3, threshold = 0.5,
-      baseHasher = TextAnalysis.baseHash _)
-    val statCols = TextAnalysis.stats(col("text")).map { case (n, c) => c.as(n) }
-    val stats = deduped.select(
-      col("doc_id") +: col("source") +: col("text") +: statCols: _*)
-    val quality = stats.filter(TextAnalysis.qualityPredicate(
-      col("n_tokens"), col("alpha_ratio"), col("avg_token_len")))
-    val contaminated = Curation.decontaminate(quality, bench, "text", "doc_id",
-        shingleN = 3, minShared = 2L)
-      .select("doc_id").distinct()
-    val clean = quality.join(contaminated, Seq("doc_id"), "left_anti")
-    val plan = clean.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    CachedFrames.unpersistAll()
+    val plan = planOf("q_pipeline_curation")
     assert(plan.contains("BroadcastHashJoin"),
       "bench grams / anti joins must broadcast")
     assert(!plan.contains("CartesianProduct"),
       s"pipeline stage regressed to a cartesian join:\n$plan")
+  }
+
+  test("surrogate ids, packing and mixing plan RunningTotals, not an RDD round trip") {
+    CachedFrames.unpersistAll()
+    for (name <- Seq("q_pack_sequences", "q_mix_sources", "q_surrogate_id",
+        "q_pipeline_curation", "q_pipeline_curation_best", "q_pipeline_corpus")) {
+      val plan = planOf(name)
+      assert(!plan.contains("Scan ExistingRDD"), s"$name must stay a Catalyst plan:\n$plan")
+      assert(plan.matches("""(?s).*\(\d+\) RunningTotals\b.*"""),
+        s"$name must plan the RunningTotals exec:\n$plan")
+      // only the curation trio persists, and only its shared quality frame
+      if (Seq("q_pack_sequences", "q_mix_sources", "q_surrogate_id").contains(name))
+        assert(!plan.contains("InMemoryRelation"), s"$name must not persist:\n$plan")
+    }
+    CachedFrames.unpersistAll()
+  }
+
+  test("q_pipeline_curation range-shuffles its narrow columns, never text") {
+    CachedFrames.unpersistAll()
+    val plan = planOf("q_pipeline_curation")
+    val exchanges = rangeExchanges(plan)
+    // the mix order and the pack order; the display orderBy by doc_id
+    // reads pack's output partitioning and adds none
+    assert(exchanges.length == 2, s"expected two range exchanges:\n$plan")
+    for (b <- exchanges)
+      assert("""\btext#""".r.findFirstIn(b).isEmpty, s"text crosses a range exchange:\n$b")
+    CachedFrames.unpersistAll()
   }
 
   test("q1_pricing_summary aggregates with a map-side partial phase") {

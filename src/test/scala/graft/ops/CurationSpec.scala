@@ -1,6 +1,8 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{CachedFrames, SparkSpec}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class CurationSpec extends SparkSpec {
@@ -194,6 +196,16 @@ class CurationSpec extends SparkSpec {
     }
     // nondecreasing pack ids in id order
     assert(packed.map(_._3).sliding(2).forall(w => w.length < 2 || w(0) <= w(1)))
+    // row for row against the one-task window, across shuffle layouts
+    val big = skewedSources.select("doc_id", "n_tokens")
+    val before = coalesce(sum("n_tokens").over(Window.orderBy("doc_id")
+      .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
+    val expected = rows(big
+      .withColumn("pack_id", before.divide(17L).cast("long"))
+      .withColumn("pack_offset", before % 17L))
+    def pack(df: DataFrame): DataFrame = Curation.packSequences(df, "doc_id", "n_tokens", 17L)
+    forEachShuffleLayout { layout => assert(rows(pack(big)) == expected, layout) }
+    assert(rows(builtThenUncached(big)(pack)) == expected)
   }
 
   test("packSequences refuses frames already carrying its output columns") {
@@ -266,6 +278,29 @@ class CurationSpec extends SparkSpec {
       (5L, "b", 40L, 0L), (6L, "b", 40L, 40L)))
   }
 
+  /** 4000 docs over skewed sources: s0 holds 80 %, so it spans several
+    * range partitions, while s1 (2.5 %), s2 (12.5 %) and the unweighted
+    * s9 are small enough to share one. Token counts 1..60.
+    */
+  private def skewedSources: DataFrame = spark.range(0, 4000).select(
+    col("id").as("doc_id"),
+    when(col("id") % 40 < 32, "s0").when(col("id") % 40 === 32, "s1")
+      .when(col("id") % 40 < 38, "s2").otherwise("s9").as("source"),
+    (pmod(xxhash64(col("id")), lit(60L)) + 1L).as("n_tokens"))
+
+  private def rows(df: DataFrame): Seq[org.apache.spark.sql.Row] =
+    df.collect().sortBy(_.getAs[Long]("doc_id")).toSeq
+
+  /** Build `op` over a cached copy of `df`, drop every cached frame,
+    * then execute. */
+  private def builtThenUncached(df: DataFrame)(op: DataFrame => DataFrame): DataFrame = {
+    val cached = CachedFrames.persistOnce(df)
+    cached.count()
+    val built = op(cached)
+    CachedFrames.unpersistAll()
+    built
+  }
+
   test("mixSources is partitioning-independent and retry-stable") {
     val d = docs.limit(300)
       .select(col("doc_id"), col("lang").as("source"),
@@ -284,6 +319,29 @@ class CurationSpec extends SparkSpec {
     val taken = Curation.mixSources(d, "doc_id", "source", "n_tokens", w, 800L)
       .groupBy("source").agg(max("mix_tokens_before")).as[(String, Long)].collect().toMap
     assert(taken("en") < 480 && taken("fr") < 320)
+    // row for row against the one-task per-source window, across
+    // shuffle layouts, with a cut inside the partition-spanning s0
+    val big = skewedSources
+    val weights = Seq("s0" -> 0.5, "s1" -> 0.2, "s2" -> 0.3)
+    val budget = 40000L
+    val allocation = weights.foldLeft(lit(null).cast("long")) { case (c, (s, wt)) =>
+      when(col("source") === s, math.floor(budget * wt / weights.map(_._2).sum).toLong)
+        .otherwise(c)
+    }
+    val perSource = Window.partitionBy("source").orderBy("__mix_h", "doc_id")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val expected = rows(big
+      .filter(col("source").isin(weights.map(_._1): _*))
+      .withColumn("__mix_h", TextAnalysis.fastH64(lit("13"), col("doc_id").cast("string")))
+      .withColumn("mix_tokens_before", coalesce(sum("n_tokens").over(perSource), lit(0L)))
+      .filter(col("mix_tokens_before") < allocation)
+      .drop("__mix_h"))
+    val kept = expected.groupBy(_.getAs[String]("source")).map { case (s, r) => s -> r.size }
+    assert(kept.keySet == Set("s0", "s1", "s2") && kept("s0") < 3200, kept)
+    def mix(df: DataFrame): DataFrame =
+      Curation.mixSources(df, "doc_id", "source", "n_tokens", weights, budget)
+    forEachShuffleLayout { layout => assert(rows(mix(big)) == expected, layout) }
+    assert(rows(builtThenUncached(big)(mix)) == expected)
   }
 
   test("mixSources validates inputs") {

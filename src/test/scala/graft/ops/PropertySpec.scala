@@ -1,6 +1,8 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{CachedFrames, SparkSpec}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -58,6 +60,23 @@ class PropertySpec extends SparkSpec {
       assert(got.map(_._1).toSeq == (0L until keys.size.toLong))
       assert(got.map(_._2).toSeq == keys.sorted.toSeq)
     }
+    // row for row against the one-task window, on a skewed key that
+    // spans several partitions, across shuffle layouts
+    val skewed = (0 until 3000).map(i => ((if (i % 10 < 8) 0 else i % 7).toLong, i.toLong))
+      .toDF("k", "id")
+    val expected = skewed
+      .withColumn("rid", row_number().over(Window.orderBy("k", "id")) - 1L)
+      .as[(Long, Long, Long)].collect().sortBy(_._3).toSeq
+    def rows(df: DataFrame): Seq[(Long, Long, Long)] =
+      df.as[(Long, Long, Long)].collect().sortBy(_._3).toSeq
+    def ids(df: DataFrame): DataFrame = Surrogate.withSequentialId(df, "rid", col("k"), col("id"))
+    forEachShuffleLayout { layout => assert(rows(ids(skewed)) == expected, layout) }
+    // built over a cached frame that is dropped before execution
+    val cached = CachedFrames.persistOnce(skewed)
+    cached.count()
+    val built = ids(cached)
+    CachedFrames.unpersistAll()
+    assert(rows(built) == expected)
   }
 
   test("winnowing: docs sharing a >= k+w-1 substring share a fingerprint") {

@@ -55,35 +55,14 @@ class RunningTotalsSpec extends SparkSpec {
     df.select("id", "k1", "k2", "v", "w", "cv", "cw", "tv", "tw").collect()
       .sortBy(_.getLong(0)).toSeq
 
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val conf = spark.conf
-    val saved = kv.map { case (k, _) => k -> conf.getOption(k) }
-    kv.foreach { case (k, v) => conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
-
-  private val cpus = Runtime.getRuntime.availableProcessors
-
   test("equals the one-task window over 1, 7 and 2×cpus partitions, AQE on and off") {
-    // AQE coalesces these small shuffles to one partition; the middle
-    // mode keeps AQE but not the coalescing, so offsets are exercised
-    val aqeModes = Seq(
-      "on" -> Seq("spark.sql.adaptive.enabled" -> "true"),
-      "on, uncoalesced" -> Seq("spark.sql.adaptive.enabled" -> "true",
-        "spark.sql.adaptive.coalescePartitions.enabled" -> "false"),
-      "off" -> Seq("spark.sql.adaptive.enabled" -> "false"))
-    for (parts <- Seq(1, 7, 2 * cpus); (aqe, aqeConf) <- aqeModes)
-      withConf(("spark.sql.shuffle.partitions" -> parts.toString) +: aqeConf: _*) {
-        for ((n, seed) <- Seq(0 -> 1L, 1 -> 2L, 37 -> 3L, 3000 -> 4L); s <- shapes) {
-          val df = frame(n, seed)
-          assert(rows(viaOperator(df, s)) == rows(viaWindow(df, s)),
-            s"partitions=$parts aqe=$aqe n=$n order=${s.order} current=${s.includeCurrent}")
-        }
+    forEachShuffleLayout { layout =>
+      for ((n, seed) <- Seq(0 -> 1L, 1 -> 2L, 37 -> 3L, 3000 -> 4L); s <- shapes) {
+        val df = frame(n, seed)
+        assert(rows(viaOperator(df, s)) == rows(viaWindow(df, s)),
+          s"$layout n=$n order=${s.order} current=${s.includeCurrent}")
       }
+    }
   }
 
   test("results do not depend on cached frames dropped between build and execution") {
